@@ -594,8 +594,8 @@ _TRI = (
 
 def _fuzzy_oracle() -> str:
     """DuckDB twin of linking.fuzzy_link_pairs over link_keys: distinct
-    keys -> char trigrams -> MinHash sigs -> 8-band LSH candidates ->
-    trigram-Jaccard score >= threshold."""
+    keys -> char trigrams -> MinHash sigs -> FUZZY_N_BANDS-band LSH
+    candidates -> trigram-Jaccard score >= threshold."""
     from .datapipe.hashing import N_MINHASH, band_sql, token_hash_sql
 
     mh_cols = ",\n         ".join(
@@ -608,10 +608,16 @@ def _fuzzy_oracle() -> str:
         for b in range(FUZZY_N_BANDS)
     )
     tri_u, tri_v = _TRI.format(k="u"), _TRI.format(k="v")
+    # AS MATERIALIZED is load-bearing: fkeys reads fbase three times and
+    # each of the FUZZY_N_BANDS branches of fcands reads fbands twice,
+    # and DuckDB inlines multiply-referenced CTEs by default — without
+    # the hints the whole graph derivation under link_keys re-runs 32
+    # times (measured at sf0.001: 264 s, then out of memory at 12.5 GiB,
+    # vs 1.4-2.2 s at <300 MB peak RSS for the same 19 rows)
     return oracle.q(
         oracle.CANON_CTES
         + f""",
-fbase AS (SELECT DISTINCT key FROM link_keys),
+fbase AS MATERIALIZED (SELECT DISTINCT key FROM link_keys),
 fkeys AS (
   SELECT DISTINCT key FROM (
     SELECT key FROM fbase
@@ -631,7 +637,7 @@ fsigs AS (
          {mh_cols}
   FROM ftoks GROUP BY key
 ),
-fbands AS (
+fbands AS MATERIALIZED (
   SELECT key,
          {bands}
   FROM fsigs

@@ -13,6 +13,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(cores: int | None) -> str:
+    """The local-mode heap, as a `spark.driver.memory` value.
+
+    Local mode: driver == the only executor, so its heap stands in for
+    the cluster's AGGREGATE executor memory — scale it with task slots
+    (1.5 GiB/core, min 16g) exactly as adding executors adds memory on
+    a real cluster. The default is capped at half of physical RAM: a
+    heap the machine cannot back is not memory the stand-in cluster
+    has, and the kernel OOM-kills the JVM once the heap grows past RAM
+    (the JVM runs ~1.2 GB of RSS above -Xmx; the rest is left to the
+    Python workers and the caller's process). $SPARK_DRIVER_MEM
+    overrides both.
+    """
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    gib = max(16, (cores or 0) * 3 // 2)
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        ram = 0  # not reported on this platform: leave the rule uncapped
+    if ram > 0:
+        gib = min(gib, max(1, ram // 2 // 2**30))
+    return f"{gib}g"
+
+
 def get_spark(
     app_name: str = "ummon_spark",
     cores: int | None = None,
@@ -48,15 +74,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # local mode: driver == the only executor, so its heap stands in
-        # for the cluster's AGGREGATE executor memory — scale it with
-        # task slots (1.5 GiB/core, min 16g) exactly as adding executors
-        # adds memory on a real cluster. $SPARK_DRIVER_MEM overrides.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEM")
-            or f"{max(16, (cores or 0) * 3 // 2)}g",
-        )
+        .config("spark.driver.memory", default_driver_memory(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # r6 (guide §3.1/§9): allow shuffled hash join where the
