@@ -66,6 +66,7 @@ def test_edge_dedupe_single_shuffle(spark):
     # aggregate is min() over the single ordered struct — same winner
     # as min_by(payload, ord) with the payload/key duplication removed)
     assert plan.count("partial_min") >= 1
+    assert "partial_min_by" not in plan
     # no union of re-computed branches
     assert "Union" not in plan
 

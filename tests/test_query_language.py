@@ -172,6 +172,35 @@ def test_has_condition(fixture_graph):
     )
 
 
+@pytest.mark.parametrize(
+    "limit, footer, counted",
+    [(3, "", False), (2, "", True), (1, "(Limited to 1 results, total: 2)", True)],
+)
+def test_query_text_page_and_footer(fixture_graph, monkeypatch, limit, footer, counted):
+    """`commands.query` text output for results shorter than, exactly,
+    and longer than `limit`: the rows shown and the footer are those of
+    a full count, but a short page (which is the whole result) runs no
+    count job."""
+    from ummon_spark import commands
+
+    nodes, edges = fixture_graph
+    lines = [
+        "auth_login (src/auth.rs::auth_login) [src/auth.rs]",
+        "validate_token (src/auth.rs::validate_token) [src/auth.rs]",
+    ]
+    counts = []
+    real_count = type(nodes).count
+    monkeypatch.setattr(
+        type(nodes), "count", lambda df: counts.append(1) or real_count(df)
+    )
+    out = commands.query(nodes, edges, "select functions", fmt="text", limit=limit)
+    if footer:
+        assert out == "\n".join(lines[:limit] + [footer])
+    else:
+        assert out == "\n".join(lines) + "\n"
+    assert bool(counts) == counted
+
+
 # --- formatter -------------------------------------------------------------
 
 

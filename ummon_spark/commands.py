@@ -73,13 +73,13 @@ def query(
     result = execute_query(nodes, edges, query_text)
     if fmt == "text" and limit > 0:
         # limit pushdown: never collect the full result to the driver —
-        # `select functions` over 10^9 nodes must not OOM here. The
-        # footer's true total comes from a distributed count; only
-        # `limit` rows cross to the driver.
-        total = result.count()
+        # `select functions` over 10^9 nodes must not OOM here. Only
+        # `limit` rows cross to the driver; a page shorter than `limit`
+        # is the whole result, so the footer's true total (a
+        # distributed count) is only computed for a full page.
         rows = result.limit(limit).collect()
         formatted = format_rows(rows, "text", 0)
-        if total > len(rows):
+        if len(rows) == limit and (total := result.count()) > limit:
             return "{}\n(Limited to {} results, total: {})".format(
                 formatted.rstrip("\n"), limit, total
             )

@@ -11,6 +11,7 @@ than once, the Spark analog of the reference's single-transaction batch
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -110,21 +111,27 @@ def materialize(g: Graph, out_dir: str, mode: str = "overwrite") -> None:
             "subj"
         ).write.mode(mode).partitionBy("pred").parquet(f"{out_dir}/edges")
 
-    # the edge table is an input of the node table (placeholders), so
-    # computing it first fills the shared caches; the two writes then
-    # run as concurrent Spark jobs (separate driver threads) instead of
-    # serializing the output tail.
+    _run_table_writes(g, [write_edges, write_nodes])
+
+
+def _run_table_writes(g: Graph, writes: list) -> None:
+    """Run a graph's independent table writes. The edge table is an
+    input of the node table (placeholders): on a persisted graph it is
+    computed once first, filling the shared caches, and the writes then
+    run as concurrent Spark jobs from driver threads, so the second
+    back-fills the first's task tail instead of serializing the output
+    tail. Unpersisted, concurrent writes would each recompute the
+    shared edge subtree, so they run in turn."""
     if g.edges.is_cached:
         g.edges.count()
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(2) as pool:
-            futs = [pool.submit(write_edges), pool.submit(write_nodes)]
-            for f in futs:
+        with ThreadPoolExecutor(len(writes)) as pool:
+            for f in [pool.submit(w) for w in writes]:
                 f.result()
     else:
-        write_nodes()
-        write_edges()
+        for w in writes:
+            w()
 
 
 def materialize_bucketed(
@@ -167,11 +174,4 @@ def materialize_bucketed(
     targets = (("nodes", g.nodes, "id"), ("edges", g.edges, "subj"))
     for name, _, _ in targets:
         spark.sql(f"DROP TABLE IF EXISTS {database}.{name}")
-    # the two table writes are independent Spark jobs — run them from
-    # two driver threads so the second back-fills the first's task tail
-    # (guide §2.6; same shape as materialize above)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as pool:
-        for f in [pool.submit(write_one, t) for t in targets]:
-            f.result()
+    _run_table_writes(g, [partial(write_one, t) for t in targets])

@@ -1,4 +1,4 @@
-"""UQL execution: AST -> Catalyst Column predicates + BFS semi-joins.
+"""UQL execution: AST -> Catalyst Column predicates + reverse-BFS semi-joins.
 
 Select (reference db_executor.rs:38-53): a filter on the nodes table —
 the condition compiles to a Column expression tree, so predicate
@@ -7,19 +7,31 @@ free (the reference compiled to a SQLite WHERE clause for the same
 reason, db_executor.rs:149-240).
 
 Traversal (db_executor.rs:56-146 + db.rs:791-895): the reference loops
-per source entity running a recursive CTE; we run ONE vectorized BFS
-from all sources at once. Faithful semantics:
+per source entity running a recursive CTE. Its answer is a set of
+SOURCES, so we walk from the TARGETS instead: one reverse BFS over a
+set of node ids, seeded with the target-type nodes (filtered by the
+condition when there is one). Level 1 is the predecessors of the
+targets along the relationship's edges; level k is the predecessors
+of level k-1 not already in levels 1..k-1. By induction, level k holds
+exactly the nodes whose shortest path (of >= 1 hop) to a matching
+target has k edges, so a source is in levels 1..10 iff the
+reference's per-source closure reaches a matching target at
+depth 1..10. The work grows with the targets' reverse neighbourhood,
+not with |sources| x |reachable|, and each level is a node-id frame,
+not a (root, dst) pair frame. Faithful semantics:
 
 * the closure INCLUDES the source at depth 0 (db.rs:853 seeds depth 0,
-  and the target-type filter applies to it) — so with source_type ==
-  target_type and no condition, every source matches itself;
+  and the target-type filter applies to it) — so with no condition,
+  sources that are themselves targets match (sources ∩ targets);
 * only the given relationship type is followed; direction is outbound
   for every type except relates_to / unknown = both
-  (db_executor.rs:64-78);
+  (db_executor.rs:64-78), which the walk sees as symmetric edges;
 * depth cap 10 (db_executor.rs:85);
 * a condition is evaluated per reached TARGET with depth > 0
   (db_executor.rs:105-146) and the SOURCE is kept if any target
-  matches.
+  matches — a source that is itself a matching target is kept only
+  if it reaches a matching target (itself included, via a cycle) in
+  >= 1 hop, which is what excluding the seed from level 0 gives.
 
 Attribute whitelist name/file_path/documentation/id
 (db_executor.rs:11); file_path maps to our doc_id column. `like` is
@@ -37,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.traversal import transitive_closure
+from ..operators.traversal import bfs_levels, union_levels
 from .parser import (
     And,
     Condition,
@@ -171,6 +183,10 @@ def execute_traversal(nodes: DataFrame, edges: DataFrame, q: TraversalQuery) -> 
     from ..types import parse_relationship_type
 
     sources = typed_nodes(nodes, edges, q.source_type)
+    targets = typed_nodes(nodes, edges, q.target_type)
+    if q.condition is not None:
+        targets = targets.filter(compile_condition(q.condition))
+    targets = targets.select("id")
     rel = parse_relationship_type(q.relationship)
     preds = REL_ALIASES.get(rel, (rel,))
     e = edges.filter(F.col("pred").isin(*preds)).select("subj", "obj")
@@ -179,26 +195,15 @@ def execute_traversal(nodes: DataFrame, edges: DataFrame, q: TraversalQuery) -> 
             e.select(F.col("obj").alias("subj"), F.col("subj").alias("obj"))
         )
 
-    roots = sources.select("id")
-    closure = transitive_closure(e, roots, None, MAX_DEPTH)
-    # depth-0 self rows (db.rs:853)
-    self_rows = roots.select(
-        F.col("id").alias("root"),
-        F.col("id").alias("dst"),
-        F.lit(0).cast("long").alias("depth"),
-    )
-    closure = closure.unionByName(self_rows)
+    def predecessors(level: DataFrame) -> DataFrame:
+        return level.join(e, level.id == e.obj).select(F.col("subj").alias("id"))
 
-    targets = typed_nodes(nodes, edges, q.target_type)
-    reached = closure.join(
-        targets.withColumnRenamed("id", "dst"), "dst", "inner"
-    )
-    if q.condition is not None:
-        reached = reached.filter(
-            (F.col("depth") > 0) & compile_condition(q.condition)
-        )
-    matched_roots = reached.select(F.col("root").alias("id")).distinct()
-    return sources.join(matched_roots, "id", "left_semi")
+    levels = bfs_levels(predecessors(targets), predecessors, MAX_DEPTH)
+    matched = union_levels(levels)
+    if q.condition is None:
+        # depth-0 self rows (db.rs:853)
+        matched = matched.unionByName(targets)
+    return sources.join(matched, "id", "left_semi")
 
 
 def execute_query(nodes: DataFrame, edges: DataFrame, query: str) -> DataFrame:

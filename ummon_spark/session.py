@@ -77,13 +77,11 @@ def get_spark(
         .config("spark.driver.memory", default_driver_memory(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # r6 (guide §3.1/§9): allow shuffled hash join where the
-        # per-partition build side fits — SMJ's sorts are pure overhead
-        # for the engine's hash-equi joins; AQE's localMap threshold
-        # additionally converts planned SMJs whose runtime partitions
-        # are small. Both are size-guarded so the same plan degrades to
-        # SMJ gracefully at 100 TB partition sizes; env-overridable for
-        # cluster tuning.
+        # join-strategy knobs, passed through at Spark's own defaults
+        # (sort-merge join preferred, no AQE shuffled-hash-join local
+        # map): shuffled hash join was measured within noise of SMJ on
+        # this engine's joins (OPTIMIZATION_r06.md), so it is NOT
+        # enabled. The env overrides exist for cluster tuning.
         .config(
             "spark.sql.join.preferSortMergeJoin",
             os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
